@@ -54,38 +54,17 @@ def norm(a: Column) -> Column:
     return F.sqrt(_dec_sum(sq))
 
 
-def _ddot(a: Column, b: Column, width: int | None = None) -> Column:
+def _ddot(a: Column, b: Column) -> Column:
     """Plain-double dot product — 2 interpreted FP ops per element vs the
     exact path's ~5 Decimal ops. NOT oracle-exact on its own; used only
     where a proven error bound lets it decide for the exact algebra
     (:func:`ivf_assign`'s argmax prune, :func:`cos_ge`, the two-level
-    candidate prune).
-
-    ``width`` (r16): the statically-known array length unrolls the fold
-    into a flat chain of double multiply-adds — ``zip_with`` +
-    ``aggregate`` are CodegenFallback expressions evaluated interpreted
-    per row with a per-row array allocation, while the unrolled chain is
-    codegen-resident arithmetic (the `_pq_sqdist` discipline; decimal
-    unrolling regresses at dim 64, plain doubles don't — measured
-    0.87 s HOF vs 0.64 s unrolled on the 64k-row two-level candidate
-    join, 0 value mismatches). BIT-IDENTICAL by construction: the chain
-    adds the same products in the same left-to-right order as the fold,
-    and rows where either side's length differs from ``width`` fall
-    back to the HOF form, preserving the zip_with null-padding
-    semantics on ragged/odd-length rows."""
-    hof = F.aggregate(
+    candidate ranking)."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    if width is None or not 0 < width <= 256:
-        return hof
-    acc = F.lit(0.0)
-    for j in range(width):
-        acc = acc + F.get(a, j).cast("double") * F.get(b, j).cast("double")
-    return F.when(
-        (F.size(a) == width) & (F.size(b) == width), acc
-    ).otherwise(hof)
 
 
 def _nz(den: Column) -> Column:
@@ -363,16 +342,14 @@ def random_projection(
     ``dim=None`` (default) derives the input width from the non-empty
     vector with the SMALLEST ``id_col`` — one ``min_by`` aggregate job —
     so a caller with 128-dim embeddings can't silently project an empty
-    frame by forgetting the parameter (r9 ADVICE: the old fixed default
-    of 64 made exactly that failure mode), and on a ragged frame the
+    frame by forgetting the parameter, and on a ragged frame the
     derived width is a pure function of the DATA, not of scan/partition
-    order (r10 ADVICE: the previous LIMIT-1 probe could pick a different
-    row between runs or file layouts, silently changing which rows
-    survive the length filter). Ids are assumed unique (the standing
-    contract everywhere in this package). Pass ``dim`` explicitly to pin
-    the width instead (the gate query does, keeping its oracle
-    independent of the probe); rows of any OTHER length are then
-    filtered as documented above."""
+    order (which would silently change which rows survive the length
+    filter between runs or file layouts). Ids are assumed unique (the
+    standing contract everywhere in this package). Pass ``dim``
+    explicitly to pin the width instead (the gate query does, keeping
+    its oracle independent of the probe); rows of any OTHER length are
+    then filtered as documented above."""
     import math
 
     e = F.col(vec_col)
@@ -518,11 +495,7 @@ def ivf_assign(
       ``array_min`` (n_probe=1) or one ``array_sort`` (n_probe>1). Zero
       Python anywhere in the plan; the right choice for small centroid
       sets (every recall-gate query: nlist ≤ ~32), where the literal is
-      a few KB. (The earlier per-centroid formulation unrolled
-      O(nlist × dim) literal expression nodes — hostile to Catalyst
-      analysis; the r2 form before it shuffled corpus × n_centroids rows
-      through a ``row_number`` window — at 100 TB that is 16× the corpus
-      through an Exchange for what a projection can compute.)
+      a few KB.
     - ``"arrow"`` — :func:`_arrow_assign`: one ``mapInPandas`` numpy
       ranking pass; the centroid matrix ships via
       ``SparkContext.broadcast`` (torrent, once per executor — NOT a
@@ -631,11 +604,11 @@ def ivf_assign(
             ),
         )
 
-    # expr-path staging (r7): the O(nlist·dim) entry array is ALIASED in
+    # expr-path staging: the O(nlist·dim) entry array is ALIASED in
     # its own projection instead of inlined — higher-order functions run
     # interpreted (no whole-stage codegen, hence no codegen subexpression
-    # elimination), so every textual reference re-evaluated the full
-    # transform; the earlier inline form referenced it up to 4 times.
+    # elimination), so every textual reference would re-evaluate the
+    # full transform.
     # CollapseProject keeps the stages separate (it never merges a
     # non-cheap expression consumed more than once). For n_probe=1 the
     # argmin is array_min (one O(nlist) pass; struct ordering = (negcos,
@@ -807,9 +780,8 @@ def _arrow_assign(
 
     Distribution (VERDICT r7 "What's wrong" #1): the centroid matrix,
     norms and ids ship via ``SparkContext.broadcast`` — torrent-
-    distributed ONCE per executor — replacing the r7 form's pickled
-    task-closure capture (re-serialized with every task) and its
-    plan-inlined ``array<array<double>>`` exact-fallback literal
+    distributed ONCE per executor — never a pickled task closure
+    (re-serialized with every task) or a plan-inlined literal
     (O(nlist·dim) in every serialized task: ~5 MB at nlist=10⁴ dim=64,
     unbounded under the cell-capped nlist ∝ N sizing). The driver still
     holds the set once to seed the broadcast — the flat strategy's
@@ -952,19 +924,19 @@ def two_level_parts(
     per re-assignment."""
     if shared is None:
         shared = two_level_shared(centroids, n_super, n_super_probe)
-    supers, members, supers_rows, shared_probe = shared
+    supers, members, supers_rows, shared_probe, shared_n_super = shared
     # a shared tuple built with DIFFERENT dials than the explicit args
-    # would silently produce wrong-but-plausible assignments (r15
-    # ADVICE): cross-check what is checkable without a new job — the
-    # effective probe count (min of the request and the super count)
-    # and the super-count upper bound. Callers passing `shared` must
+    # would silently produce wrong-but-plausible assignments: the tuple
+    # records the n_super it was requested with, so that dial compares
+    # exactly; the probe count compares in its effective form (min of
+    # the request and the super count). Callers passing `shared` must
     # pass the dials it was built with (every composed operator does).
-    if n_super is not None and len(supers_rows) > n_super:
+    if n_super != shared_n_super:
         raise ValueError(
-            f"two_level shared tuple holds {len(supers_rows)} supers but "
-            f"n_super={n_super} was requested — the tuple was built with "
-            "different dials; rebuild it with two_level_shared(centroids, "
-            "n_super, n_super_probe) or drop the explicit n_super"
+            f"two_level shared tuple was built with n_super="
+            f"{shared_n_super} but n_super={n_super} was requested — "
+            "rebuild it with two_level_shared(centroids, n_super, "
+            "n_super_probe) using the dials you pass here"
         )
     if min(n_super_probe, len(supers_rows)) != shared_probe:
         raise ValueError(
@@ -987,9 +959,11 @@ def two_level_shared(
     n_super_probe: int = 4,
 ) -> tuple:
     """The df-INDEPENDENT half of :func:`two_level_parts` — super
-    centroids (collected once), member assignment, and the effective
-    ``n_super_probe`` — computed once and reusable across every frame
-    assigned against the same centroid set in one operator call.
+    centroids (collected once), member assignment, the effective
+    ``n_super_probe`` and the requested ``n_super`` (which
+    :func:`two_level_parts` checks against its own argument) — computed
+    once and reusable across every frame assigned against the same
+    centroid set in one operator call.
     Composed operators (``ivf_topk`` / ``ivf_binary_topk`` under
     ``strategy="twolevel"``) assign a corpus AND a query batch: without
     sharing, each call re-runs the centroid count job, the block-mean
@@ -1003,9 +977,8 @@ def two_level_shared(
     one allowed driver materialization besides the scalar count).
     Collect it ONCE (``supers_rows``) and hand every call the rows: the
     block-mean job runs exactly once and there is no executor cache to
-    leak across Lloyd iterations (r9 self-review: the earlier persist()
-    accumulated one dead n_super-row cache per kmeans_refine
-    iteration)."""
+    leak across Lloyd iterations."""
+    requested_n_super = n_super
     nlist = centroids.count()
     if nlist == 0:
         # name the two-level entry points, not the flat ivf_assign the
@@ -1042,8 +1015,8 @@ def two_level_shared(
     )
     # membership assigns the centroid frame ITSELF against the small
     # super set — the block id is only needed for the means, so routing
-    # members through the ranked join (as the r8 form did) was a
-    # redundant nlist ⋈ nlist self-join
+    # members through the ranked join would be a redundant nlist ⋈ nlist
+    # self-join
     members = ivf_assign(
         centroids.select(
             F.col("cent_id").alias("__cid"), F.col("cvec").alias("__cv")
@@ -1058,7 +1031,7 @@ def two_level_shared(
         F.col("nrm").alias("__cnrm"),
         F.col("cent_id").alias("__sid"),
     )
-    return supers, members, supers_rows, n_super_probe
+    return supers, members, supers_rows, n_super_probe, requested_n_super
 
 
 def _super_centroids(
@@ -1104,9 +1077,9 @@ def _super_centroids(
 def _decimal_mean_vectors(exploded: DataFrame) -> DataFrame:
     """Per-key per-dimension engine-portable mean, rebuilt into vectors:
     input (``__k``, ``__dim``, ``__v``) → output (``__k``, ``cvec``).
-    THE one copy of the cross-engine mean contract (r9 self-review —
-    it previously lived verbatim in both :func:`kmeans_refine` and
-    :func:`_super_centroids`): the component sum accumulates in
+    THE one copy of the cross-engine mean contract (shared by
+    :func:`kmeans_refine`, :func:`_super_centroids` and the cell
+    means): the component sum accumulates in
     DECIMAL(28,12) (exact, order-free), is cast to double (correctly
     rounded in both engines), then divided by the count — one
     deterministic IEEE division; vectors rebuild via one
@@ -1130,6 +1103,12 @@ def _decimal_mean_vectors(exploded: DataFrame) -> DataFrame:
     )
 
 
+#: salt count of :func:`ivf_assign_two_level`'s two-stage top-k — the
+#: merge is exact at any count; this one caps stage-1 buffers at
+#: ~candidates/16 entries per (vector, salt)
+_TOPK_SALT = 16
+
+
 def ivf_assign_two_level(
     df: DataFrame,
     centroids: DataFrame,
@@ -1138,7 +1117,6 @@ def ivf_assign_two_level(
     n_super: int | None = None,
     n_super_probe: int = 4,
     n_probe: int = 1,
-    topk_salt: int = 16,
     return_candidates: bool = False,
     shared: tuple | None = None,
 ) -> DataFrame:
@@ -1182,9 +1160,7 @@ def ivf_assign_two_level(
        contract) re-scores only rows whose double ranking is ambiguous
        — the full soundness argument (per-salt keep width, untrusted
        norm guard, boundary gap check) is at the implementation site.
-       Output membership is identical to the pure exact ranking;
-       ``topk_salt=1`` keeps the legacy all-exact single-aggregate
-       shapes (``MIN(struct)`` at n_probe=1) for A/B.
+       Output membership is identical to the pure exact ranking.
 
     APPROXIMATE by construction: a vector's true nearest centroid can
     live in an unprobed super-cell (recall improves with
@@ -1211,40 +1187,31 @@ def ivf_assign_two_level(
     corpus on the super-cell key once. Rows whose probed super-cells own
     zero centroids drop out (inner join; possible only when a
     super-centroid attracts no members — empty cells, standard IVF
-    behavior). ``n_probe > 1`` (r9, closing the family's one declared
-    API hole) keeps the SAME single-shuffle topology: instead of the
-    map-side-combined ``MIN(struct)`` argmin, the aggregate is a
-    map-side-partial ``collect_list`` of the (negcos, cent_id) entries
-    → ``array_sort`` → ``slice(1, n_probe)`` — no window. Candidates are
-    distinct per vector by construction (each centroid lives in exactly
-    one super-cell), so no dedup step is needed.
+    behavior). Candidates are distinct per vector by construction (each
+    centroid lives in exactly one super-cell), so no dedup step is
+    needed.
 
-    The top-k aggregation is SALTED two-stage by default (``topk_salt``,
+    The top-k aggregation is SALTED two-stage (``_TOPK_SALT`` salts,
     VERDICT r9 "What's wrong" #1): a single per-vector ``collect_list``
     would hold up to the full per-vector candidate count
     (``n_super_probe · nlist / n_super`` 16-byte structs ≈ 33 KB per
     vector resident in the hash aggregate at the path's own regime —
     nlist = 2¹⁸, n_super = √nlist, n_super_probe = 4). Instead, stage 1
-    groups by ``(vec_id, pmod(hash(cent_id), topk_salt))`` and keeps each
-    salt's local top-``n_probe + 1`` plus the two-phase boundary window
-    (every candidate lands in exactly one salt group, and any member of
-    the global top-k is a member of its own salt's top-k, so the merge is
-    EXACT — same results, order-insensitive algebra, same oracle; the +1
-    entry and the 2·EPS window feed the r16 gap check); stage 2 merges
-    the per-salt survivors per vector. No partial buffer ever holds the
-    full candidate list past stage 1's local sort: stage 1's buffers hold
-    ~candidates/topk_salt entries (filtered to ~``n_probe + 1`` before
-    the exchange), stage 2's the per-salt slices. Both stages run KEY-ONLY — (id, salt,
-    struct) rows, never the vector payload — and the payload (vec, nrm)
-    rejoins by ``id_col`` afterwards (the :func:`_super_centroids`
-    key-only discipline), so the extra exchange carries exactly the one
-    vec copy per vector the unsalted aggregate's ``first(vec)`` shuffled
-    anyway. Census at nlist=10⁴ (tools/bench_twolevel_r10.json,
-    ``topk_buffer_census``): the unsalted per-vector buffer bound tracks
-    the candidate count; the salted bounds don't. ``topk_salt=1`` keeps
-    the legacy single-aggregate shape (payload carried through
-    ``first``), for A/B and for tiny candidate sets where two extra
-    exchanges cost more than the buffer saves.
+    groups by ``(vec_id, pmod(hash(cent_id), _TOPK_SALT))`` and keeps
+    each salt's local top-``n_probe + 1`` plus the two-phase boundary
+    window (every candidate lands in exactly one salt group, and any
+    member of the global top-k is a member of its own salt's top-k, so
+    the merge is EXACT — same results at any salt count, same oracle;
+    the +1 entry and the 2·EPS window feed the gap check); stage 2
+    merges the per-salt survivors per vector. Stage 1's buffers hold
+    ~candidates/_TOPK_SALT entries (filtered to ~``n_probe + 1`` before
+    the exchange), stage 2's the per-salt slices. Both stages run
+    KEY-ONLY — (id, salt, struct) rows, never the vector payload — and
+    the payload (vec, nrm) rejoins by ``id_col`` afterwards (the
+    :func:`_super_centroids` key-only discipline). Census at nlist=10⁴
+    (tools/bench_twolevel_r10.json, ``topk_buffer_census``): an unsalted
+    per-vector buffer bound tracks the candidate count; the salted
+    bounds don't.
 
     ``return_candidates=True`` returns the pre-argmin (id, cent_id)
     candidate stream instead of the assignment — the cost model's bound
@@ -1252,20 +1219,15 @@ def ivf_assign_two_level(
 
     CONTRACT: ``id_col`` values must be unique (the standing assumption
     everywhere in this package — every gate fixture and oracle keys on
-    it). The salted path (``topk_salt > 1``) rejoins the payload by
-    ``id_col`` after the key-only merge, so a frame with DUPLICATE ids
-    would fan each pick out across the duplicates — one row per
-    (pick, duplicate) — where the ``topk_salt=1`` legacy aggregate
-    returns one row per (id, pick) with ``first()``-arbitrary payload
-    (r10 ADVICE). Neither shape is meaningful on duplicate ids; the
-    contract is documented rather than enforced with a
-    ``dropDuplicates`` because that would add a payload-carrying
-    shuffle to every call to guard an out-of-contract input.
+    it). The payload rejoins by ``id_col`` after the key-only merge, so
+    a frame with DUPLICATE ids would fan each pick out across the
+    duplicates — one row per (pick, duplicate). The contract is
+    documented rather than enforced with a ``dropDuplicates`` because
+    that would add a payload-carrying shuffle to every call to guard an
+    out-of-contract input.
     """
     if n_probe < 1:
         raise ValueError("n_probe must be >= 1")
-    if topk_salt < 1:
-        raise ValueError("topk_salt must be >= 1")
     if shared is None:
         shared = two_level_shared(centroids, n_super, n_super_probe)
     members, probes = two_level_parts(
@@ -1279,42 +1241,6 @@ def ivf_assign_two_level(
         # (N · n_super_probe · cell size); decade benches pair wall
         # ratios with its measured count (r6 census discipline)
         return cand.select(id_col, F.col("__cid").alias("cent_id"))
-    if topk_salt == 1:
-        # legacy single-aggregate shapes (exact decimal scoring end to
-        # end, payload carried through the aggregate) — kept for A/B
-        # and for tiny candidate sets where the two-phase path's extra
-        # key-only exchanges cost more than the fast scoring saves
-        scored = cand.select(
-            id_col,
-            vec_col,
-            "nrm",
-            F.struct(
-                (
-                    -(
-                        dot(F.col(vec_col), F.col("__cv"))
-                        / _nz(F.col("nrm") * F.col("__cnrm"))
-                    )
-                ).alias("n"),
-                F.col("__cid").alias("c"),
-            ).alias("__e"),
-        )
-        if n_probe == 1:
-            best = scored.groupBy(id_col).agg(
-                F.min("__e").alias("__b"),
-                F.first(vec_col).alias(vec_col),
-                F.first("nrm").alias("nrm"),
-            )
-            return best.select(
-                id_col, vec_col, "nrm", F.col("__b")["c"].alias("cent_id")
-            )
-        topk = scored.groupBy(id_col).agg(
-            F.slice(F.array_sort(F.collect_list("__e")), 1, n_probe).alias("__bs"),
-            F.first(vec_col).alias(vec_col),
-            F.first("nrm").alias("nrm"),
-        )
-        return topk.select(
-            id_col, vec_col, "nrm", F.explode("__bs").alias("__b")
-        ).select(id_col, vec_col, "nrm", F.col("__b")["c"].alias("cent_id"))
     # ---- salted two-stage top-k, KEY-ONLY, TWO-PHASE (r16) --------------
     # Phase 1 scores every candidate with the PLAIN-DOUBLE cosine (the
     # decimal algebra is ~5 Decimal ops/element, interpreted — measured
@@ -1322,8 +1248,7 @@ def ivf_assign_two_level(
     # the salted key-only top-k on that ranking; the exact-decimal
     # algebra (the oracle contract) re-scores ONLY rows whose double
     # ranking is ambiguous. Soundness — the :func:`ivf_assign` two-phase
-    # discipline applied to the join topology (the r15 deferred design,
-    # with the per-salt keep width it called for):
+    # discipline applied to the join topology:
     #
     # - any correctly-rounded float64 dot differs from the exact decimal
     #   dot by < dim·ulp ≈ 1e-13 relative, so with |nrm·cnrm| > 1e-3 the
@@ -1356,8 +1281,7 @@ def ivf_assign_two_level(
     #
     # Both aggregation stages stay KEY-ONLY ((id, salt, struct) rows,
     # never the vector payload — the `_super_centroids` discipline);
-    # the payload rejoins by ``id_col`` afterwards exactly as the r10
-    # salted merge did.
+    # the payload rejoins by ``id_col`` afterwards.
     EPS = 1e-6
     den = F.col("nrm") * F.col("__cnrm")
     staged = cand.select(
@@ -1373,7 +1297,7 @@ def ivf_assign_two_level(
     )
     keyed = staged.select(
         id_col,
-        F.pmod(F.hash("__cid"), F.lit(topk_salt)).alias("__salt"),
+        F.pmod(F.hash("__cid"), F.lit(_TOPK_SALT)).alias("__salt"),
         F.struct(
             F.col("__fn").alias("n"),
             F.col("__cid").alias("c"),
@@ -1407,8 +1331,8 @@ def ivf_assign_two_level(
         > F.lit(EPS),
     ).otherwise(F.lit(False))
     ok = (F.col("__n") <= F.lit(n_probe)) | ((F.col("__u") == 0) & gap_ok)
-    # ONE linear chain for both outcomes (no fork/union — a forked plan
-    # doubled the analyzed tree and every downstream re-analysis):
+    # ONE linear chain for both outcomes (no fork/union, which would
+    # double the analyzed tree and every downstream re-analysis):
     # decisive rows explode exactly their final n_probe picks, ambiguous
     # rows explode their full kept set; the centroid payload left-joins
     # ONLY onto ambiguous rows (join condition carries ¬ok), the vector
@@ -1416,7 +1340,7 @@ def ivf_assign_two_level(
     # one aggregation resolves both cases — decisive rows' entries score
     # NULL and are ≤ n_probe by construction (the slice keeps them all),
     # ambiguous rows re-rank by the exact-decimal (negcos, cent_id)
-    # struct order, NULL-negcos-first, exactly the legacy aggregate's.
+    # struct order, NULL-negcos-first.
     # The centroid payload comes straight off the centroid frame (+ the
     # same decimal norm every assign path computes) — NOT off `members`,
     # whose subtree would re-plan the whole supers assignment here.
@@ -2175,7 +2099,6 @@ def ivf_pq_topk_indexed(
     exclude_self: bool = True,
     strategy: str = "auto",
     dim: int = 64,
-    pq_strategy: str = "auto",
     rerank_k: int | None = None,
     residual_means: DataFrame | None = None,
 ) -> DataFrame:
@@ -2221,23 +2144,6 @@ def ivf_pq_topk_indexed(
             "ivf_pq_topk_indexed needs a pq=True write_ivf_index layout — "
             f"columns {missing} absent from the index frame"
         )
-    code_rows = index.select(
-        id_col,
-        "cent_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"), F.col(f"code_{s}").alias("code")
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("__c"),
-    ).select(
-        id_col, "cent_id",
-        F.col("__c.s").alias("s"), F.col("__c.code").alias("code"),
-    )
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
     )
@@ -2245,30 +2151,10 @@ def ivf_pq_topk_indexed(
         q, centroids, "__qvec", query_id_col, n_probe=n_probe,
         strategy=strategy,
     )
-    resolved = _resolve_pq_strategy(pq_strategy, codebooks)
-    if residual_means is not None:
-        qcells = _ivf_residuals(probes, residual_means, "__qvec").select(
-            query_id_col, "cent_id", F.col("__rvec").alias("__qvec")
-        )
-        lut = _pq_lut(
-            qcells, codebooks, m, dim, query_id_col, resolved,
-            extra_keys=["cent_id"],
-        )
-        matched = code_rows.join(F.broadcast(lut), ["cent_id", "s", "code"])
-    else:
-        lut = _pq_lut(q, codebooks, m, dim, query_id_col, resolved)
-        matched = code_rows.join(
-            F.broadcast(probes.select(query_id_col, "cent_id")), "cent_id"
-        ).join(F.broadcast(lut), [query_id_col, "s", "code"])
-    scored = (
-        matched.filter(
-            F.col(query_id_col) != F.col(id_col) if exclude_self else F.lit(True)
-        )
-        .groupBy(
-            query_id_col, id_col,
-            *(["cent_id"] if rerank_k is not None else []),
-        )
-        .agg(F.sum(F.col("dist").cast(DEC)).cast("double").alias("adc_dist"))
+    scored = _ivf_adc_scores(
+        _pq_code_rows(index, m, [id_col, "cent_id"]), q, probes, codebooks,
+        m, dim, id_col, query_id_col, exclude_self, residual_means,
+        keys=["cent_id"] if rerank_k is not None else None,
     )
     if rerank_k is None:
         return top_k_per_group(
@@ -3888,12 +3774,12 @@ def apply_rotation(
     out_col: str | None = None,
 ) -> DataFrame:
     """y = R·x per row, map-side: the dim×dim matrix rides a ONE-ROW
-    broadcast frame (never plan literals — dim² floats would blow past
-    ``PQ_INLINE_MAX_LITERALS`` at any real dim) and each output
-    component is one zip_with/aggregate dot product — no shuffle, no
-    Python, whole-stage-codegen-resident like every hot-path projection
-    in this module. Overwrites ``vec_col`` unless ``out_col`` names a
-    new column. Components widen to double before the multiply (the
+    broadcast frame (never plan literals — dim² floats would bloat
+    every plan at any real dim) and each output component is one
+    zip_with/aggregate dot product — no shuffle, no Python,
+    whole-stage-codegen-resident like every hot-path projection in this
+    module. Overwrites ``vec_col`` unless ``out_col`` names a new
+    column. Components widen to double before the multiply (the
     residual-subtract precision discipline)."""
     out_col = out_col or vec_col
     mdf = local_df(
@@ -3931,9 +3817,7 @@ _PQ_SQDIST_UNROLL_MAX = 32
 def _pq_sqdist(seg: Column, code_vec: Column, sub: int | None = None) -> Column:
     """Decimal-accumulated squared L2 between a subspace slice and a
     codeword vector — exact and order-free, so SQL SUM() over the same
-    terms is bit-identical. Shared by the inline (literal codeword) and
-    broadcast (codeword column) strategies: both run the IDENTICAL
-    decimal algebra, which is what makes them output-identical.
+    terms is bit-identical.
 
     ``sub`` (the statically-known subspace width) unrolls the
     accumulation into a flat ``element_at`` chain: ``zip_with`` +
@@ -3963,82 +3847,39 @@ def _pq_sqdist(seg: Column, code_vec: Column, sub: int | None = None) -> Column:
     return _dec_sum(diffs)
 
 
-def _pq_subdist(vec_col: str, s: int, sub: int, cvals: list[float]) -> Column:
-    """Decimal-accumulated squared L2 between a vector's subspace-s slice
-    and a literal codeword — exact and order-free, so SQL SUM() over the
-    same terms is bit-identical. One shallow zip_with + aggregate (not a
-    16-deep chained-cast expression: m×k of those sends Catalyst analysis
-    + codegen into the minutes — the nested-HOF trap from round 1)."""
-    seg = F.slice(F.col(vec_col), s * sub + 1, sub)
-    return _pq_sqdist(seg, F.array(*[F.lit(v) for v in cvals]), sub=sub)
+def _pq_subspace_dists(
+    frame: DataFrame,
+    codebooks: list[tuple[int, int, list[float]]],
+    vec_col: str,
+    head: list[str],
+    m: int,
+    dim: int,
+) -> DataFrame:
+    """Every (row, subspace, codeword) squared distance — the one copy
+    of the PQ distance step that encoding, codebook refinement and the
+    ADC lookup table share. Each vector explodes map-side into its m
+    subspace slices (head..., __s, __seg) and joins the codebooks,
+    which ride ONE BroadcastExchange as a tiny DataFrame (m×n_codes
+    rows, shipped once per executor) — zero codeword literals in the
+    plan at any dial (VERDICT r12 #3). Output: head..., __s, __seg,
+    __cb_code (the codeword id), __d (:func:`_pq_sqdist`), plus the
+    codebook's own join columns — all prefixed, so the join never
+    collides with the frame's columns.
 
-
-#: past this many total codebook floats (m × n_codes × dim/m = k·dim),
-#: ``pq_strategy="auto"`` switches from the inline (literal-codeword)
-#: projection to the broadcast-join form: the codebook rides a
-#: BroadcastExchange (m×k rows, shipped once per executor), ZERO plan
-#: literals at any dial, and the identical decimal algebra —
-#: output-identical to inline (unit-pinned). Two independent ceilings
-#: motivate the switch, both measured (tools/bench_pq_strategy_r13.json):
-#: (1) plan SIZE — at production dials (m=16 × 256 codes × dim=1024 →
-#: 262k literals, VERDICT r12 #3) the literal plan hits the same
-#: Catalyst ceiling the IVF family documented at nlist=10⁴; (2) plan
-#: COST — well before that, the m×k struct-sort expression falls out
-#: of whole-stage codegen and evaluates interpreted per row: at 4096
-#: floats the inline encode reads 40.9 s vs broadcast 7.8 s over 40k
-#: rows (5.2×, and the gap GROWS with rows), at 2048 floats 16.3 s vs
-#: 1.8 s over the small fixture. The crossover sits at/below 1024
-#: floats (inline 6.6 s vs broadcast 3.9 s at 40k rows — a bounded
-#: constant-ish gap). r13 kept inline at exactly 1024 floats only for
-#: gate-plan byte-stability; the same census shows broadcast winning
-#: at EVERY measured dial including 1024 (2.6–3.8 s vs 6.5–10.4 s —
-#: the m×k struct-sort is analysis/codegen-bound well before the plan
-#: size ceiling), so r14 drops the threshold to 512 (VERDICT r13 #1):
-#: the default gate dials (m=4 × 16 codes × dim=64 = 1024 floats) now
-#: ride the broadcast codebook, and inline survives only for tiny
-#: books where the single projection beats the join setup outright.
-PQ_INLINE_MAX_LITERALS = 512
-
-
-def _resolve_pq_strategy(
-    pq_strategy: str, codebooks: list[tuple[int, int, list[float]]]
-) -> str:
-    if pq_strategy not in ("auto", "inline", "broadcast"):
-        raise ValueError(
-            f"unknown pq_strategy: {pq_strategy!r} "
-            "(expected 'auto', 'inline' or 'broadcast')"
-        )
-    if pq_strategy != "auto":
-        return pq_strategy
-    lits = sum(len(vals) for (_, _, vals) in codebooks)
-    return "broadcast" if lits > PQ_INLINE_MAX_LITERALS else "inline"
-
-
-def _pq_codebook_df(spark, codebooks) -> DataFrame:
-    """The codebooks as a tiny DataFrame (__cb_s, __cb_code, __cb_cvec)
-    — m×n_codes rows, the broadcast side of the zero-literal strategy.
-    Column names are prefixed so the join never collides with corpus
-    columns. Born in ONE slice (:func:`local_df` — r15): every job that
-    builds this broadcast otherwise pays one Python-worker round-trip
-    per default slice, a measured ~0.3 s/job constant at 32 cores."""
-    return local_df(
-        spark,
+    The codebook frame is born in ONE slice (:func:`local_df`): every
+    job that builds this broadcast otherwise pays one Python-worker
+    round-trip per default slice, a measured ~0.3 s/job constant at 32
+    cores."""
+    sub = dim // m
+    cb = local_df(
+        frame.sparkSession,
         [
             (int(s), int(code), [float(v) for v in vals])
             for (s, code, vals) in codebooks
         ],
         "__cb_s int, __cb_code int, __cb_cvec array<double>",
     )
-
-
-def _pq_segments(
-    frame: DataFrame, vec_col: str, head: list[str], m: int, sub: int
-) -> DataFrame:
-    """Map-side explode of each vector into its m subspace slices:
-    (head..., __s, __seg) — the probe side of the broadcast codebook
-    join. The slice projection is the same `F.slice` the inline
-    strategy uses, so segment values are bit-identical."""
-    return frame.select(
+    segs = frame.select(
         *head,
         F.explode(
             F.array(
@@ -4056,48 +3897,28 @@ def _pq_segments(
     ).select(
         *head, F.col("__x.s").alias("__s"), F.col("__x.seg").alias("__seg")
     )
-
-
-def _pq_encode_broadcast(
-    corpus: DataFrame,
-    codebooks: list[tuple[int, int, list[float]]],
-    m: int,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    keep: list[str],
-) -> DataFrame:
-    """:func:`pq_encode`'s zero-plan-literal strategy: slices ⋈
-    broadcast(codebook df) → per-(row, subspace) argmin as ONE partial
-    aggregation. The fan-out (m×n_codes scored rows per vector) is the
-    same arithmetic the inline projection performs — here it flows
-    through whole-stage codegen and collapses map-side: `F.min` over
-    struct(dist, code) is partial-aggregable, so the single exchange
-    carries one row per input row, never the fan-out. Tie order
-    (dist asc, code asc — struct ordering) matches inline's
-    `array_sort`. Requires unique ``id_col`` (+``keep``) rows — exact
-    duplicate ids would merge where inline keeps both."""
-    sub = dim // m
-    cb = _pq_codebook_df(corpus.sparkSession, codebooks)
-    segs = _pq_segments(corpus, vec_col, [id_col, *keep], m, sub)
-    scored = segs.join(
+    return segs.join(
         F.broadcast(cb), F.col("__s") == F.col("__cb_s")
     ).withColumn("__d", _pq_sqdist(F.col("__seg"), F.col("__cb_cvec"), sub=sub))
-    agg = scored.groupBy(id_col, *keep).agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("__s") == s,
+
+
+def _pq_code_rows(codes: DataFrame, m: int, head: list[str]) -> DataFrame:
+    """Explode a :func:`pq_encode` output's ``code_0..code_{m-1}`` into
+    key-only (head..., s, code) rows — one per subspace, the stream the
+    ADC lookup joins and the code census consume."""
+    return codes.select(
+        *head,
+        F.explode(
+            F.array(
+                *[
                     F.struct(
-                        F.col("__d").alias("dist"),
-                        F.col("__cb_code").alias("code"),
-                    ),
-                )
-            )["code"].alias(f"code_{s}")
-            for s in range(m)
-        ]
-    )
-    return agg.select(id_col, *[f"code_{s}" for s in range(m)], *(keep or []))
+                        F.lit(s).alias("s"), F.col(f"code_{s}").alias("code")
+                    )
+                    for s in range(m)
+                ]
+            )
+        ).alias("__c"),
+    ).select(*head, F.col("__c.s").alias("s"), F.col("__c.code").alias("code"))
 
 
 def _pq_lut(
@@ -4106,50 +3927,82 @@ def _pq_lut(
     m: int,
     dim: int,
     query_id_col: str,
-    strategy: str,
     extra_keys: list[str] | None = None,
 ) -> DataFrame:
     """Per-query ADC lookup table (query_id, *extra_keys, s, code,
     dist) — exact subspace distances from the query vector (column
-    ``__qvec``) to every codeword. ``inline`` builds it as m×n_codes
-    literal-codeword expressions; ``broadcast`` as slices ⋈
-    broadcast(codebook df) — zero plan literals at any dial (VERDICT
-    r12 #3), identical decimal algebra, identical rows.
+    ``__qvec``) to every codeword.
 
     ``extra_keys`` rides additional head columns through (the residual
     IVFADC path feeds one ``__qvec`` PER PROBED CELL and keys the LUT
     by (query_id, cent_id) — r13 VERDICT #2)."""
-    sub = dim // m
     keys = extra_keys or []
-    if strategy == "broadcast":
-        segs = _pq_segments(q, "__qvec", [query_id_col, *keys], m, sub)
-        return segs.join(
-            F.broadcast(_pq_codebook_df(q.sparkSession, codebooks)),
-            F.col("__s") == F.col("__cb_s"),
-        ).select(
-            query_id_col,
-            *keys,
-            F.col("__s").alias("s"),
-            F.col("__cb_code").alias("code"),
-            _pq_sqdist(F.col("__seg"), F.col("__cb_cvec"), sub=sub).alias("dist"),
-        )
-    lut_entries = [
-        F.struct(
-            F.lit(s).alias("s"),
-            F.lit(code).alias("code"),
-            _pq_subdist("__qvec", s, sub, cvals).alias("dist"),
-        )
-        for (s, code, cvals) in codebooks
-    ]
-    return q.select(
-        query_id_col, *keys, F.explode(F.array(*lut_entries)).alias("__e")
+    return _pq_subspace_dists(
+        q, codebooks, "__qvec", [query_id_col, *keys], m, dim
     ).select(
         query_id_col,
         *keys,
-        F.col("__e.s").alias("s"),
-        F.col("__e.code").alias("code"),
-        F.col("__e.dist").alias("dist"),
+        F.col("__s").alias("s"),
+        F.col("__cb_code").alias("code"),
+        F.col("__d").alias("dist"),
     )
+
+
+def _adc_sum(
+    matched: DataFrame,
+    query_id_col: str,
+    id_col: str,
+    exclude_self: bool,
+    keys: list[str] | None = None,
+) -> DataFrame:
+    """The ADC distance per (query, candidate, *keys): the decimal-exact
+    sum of the matched LUT entries' ``dist`` → ``adc_dist``."""
+    return (
+        matched.filter(
+            F.col(query_id_col) != F.col(id_col) if exclude_self else F.lit(True)
+        )
+        .groupBy(query_id_col, id_col, *(keys or []))
+        .agg(F.sum(F.col("dist").cast(DEC)).cast("double").alias("adc_dist"))
+    )
+
+
+def _ivf_adc_scores(
+    code_rows: DataFrame,
+    q: DataFrame,
+    probes: DataFrame,
+    codebooks: list[tuple[int, int, list[float]]],
+    m: int,
+    dim: int,
+    id_col: str,
+    query_id_col: str,
+    exclude_self: bool,
+    means: DataFrame | None,
+    keys: list[str] | None = None,
+) -> DataFrame:
+    """ADC distances of the probed-cell candidates — the scoring half
+    shared by :func:`ivf_pq_topk` and :func:`ivf_pq_topk_indexed`.
+    ``code_rows`` is the (id, cent_id, s, code) stream, ``q`` the
+    (query_id, __qvec) batch and ``probes`` its cell assignment.
+
+    Without ``means`` each query builds one LUT and a broadcast probe
+    join restricts the code stream to the probed cells. With ``means``
+    (the residual layout) each query builds one LUT per (query, probed
+    cell) from its residual against THAT cell's mean, so the (query,
+    cell)-keyed LUT join is itself the probe restriction."""
+    if means is not None:
+        qcells = _ivf_residuals(probes, means, "__qvec").select(
+            query_id_col, "cent_id", F.col("__rvec").alias("__qvec")
+        )
+        lut = _pq_lut(
+            qcells, codebooks, m, dim, query_id_col, extra_keys=["cent_id"]
+        )
+        matched = code_rows.join(F.broadcast(lut), ["cent_id", "s", "code"])
+    else:
+        lut = _pq_lut(q, codebooks, m, dim, query_id_col)
+        matched = code_rows.join(
+            F.broadcast(probes.select(query_id_col, "cent_id")), "cent_id"
+        ).join(F.broadcast(lut), [query_id_col, "s", "code"])
+    return _adc_sum(matched, query_id_col, id_col, exclude_self, keys)
 
 
 def _cell_mean_centroids(assigned: DataFrame, vec_col: str) -> DataFrame:
@@ -4221,19 +4074,25 @@ def _materialize_means_and_residual_books(
 
     Returns ``(mean_df, books)`` — the :func:`_materialize_cell_means`
     frame and the :func:`pq_codebooks`-format init list."""
+    from pyspark.sql.types import DecimalType, IntegralType
+
     spark = assigned.sparkSession
     # the fused collect keys rows by a long cast of id/cent_id; a
     # non-integral id column would silently NULL under the cast (and
     # corrupt the init-code ids) where pq_codebooks kept the raw value
-    # (r15 ADVICE) — validate up front with a clear error instead
+    # — validate up front with a clear error instead. Integer types and
+    # decimal(p≤18, 0) cast to long exactly and are accepted.
     for col_name in (id_col, "cent_id"):
-        t = assigned.schema[col_name].dataType.simpleString()
-        if t not in ("tinyint", "smallint", "int", "bigint"):
+        t = assigned.schema[col_name].dataType
+        lossless = isinstance(t, IntegralType) or (
+            isinstance(t, DecimalType) and t.scale == 0 and t.precision <= 18
+        )
+        if not lossless:
             raise ValueError(
                 f"residual codebook init requires an integral {col_name!r} "
-                f"column (got {t}): the fused means+sample collect keys "
-                "rows by a long cast, which would silently NULL "
-                "non-integral ids"
+                f"column (got {t.simpleString()}): the fused means+sample "
+                "collect keys rows by a long cast, which would silently "
+                "NULL non-integral ids"
             )
     tagged_means = _cell_mean_centroids(assigned, vec_col).select(
         F.lit(0).alias("__tag"),
@@ -4328,53 +4187,46 @@ def pq_encode(
     vec_col: str = "embedding",
     dim: int = 64,
     keep: list[str] | None = None,
-    pq_strategy: str = "auto",
 ) -> DataFrame:
     """PQ encoding — per subspace, the nearest codeword id (squared-L2
     argmin, ties by code id). A 64-dim float vector compresses to ``m``
     small ints — the 16× storage cut that makes 100 TB ANN serving
     tractable. Output: (id_col, code_0..code_{m-1}, *keep) — ``keep``
-    carries extra columns (e.g. the vector itself for
-    :func:`pq_refine_codebooks`'s mean step) through without a rejoin.
+    carries extra columns (e.g. the cell id for :func:`ivf_pq_topk`)
+    through without a rejoin.
 
-    REQUIRES unique (id_col, *keep) rows (r13 review): the broadcast
-    strategy's argmin is a group-by over those columns, so exact
-    duplicate ids MERGE to one output row where inline keeps both —
-    and ``pq_strategy="auto"`` reaches the broadcast form without the
-    caller choosing it once the codebook crosses
-    ``PQ_INLINE_MAX_LITERALS``. Dedup ids first (every caller in this
-    package feeds unique vector ids).
+    Physical form: slices ⋈ broadcast(codebook df)
+    (:func:`_pq_subspace_dists`) → per-(row, subspace) argmin as ONE
+    partial aggregation — zero codeword literals at any dial
+    (plan-asserted at m=16/k=256/dim=512). The m×n_codes fan-out flows
+    through whole-stage codegen and collapses map-side: ``F.min`` over
+    struct(dist, code) is partial-aggregable, so the single exchange
+    carries one row per input row, never the fan-out; struct ordering
+    gives the (dist, code) tie order.
 
-    ``pq_strategy`` picks the physical form (both run the identical
-    decimal algebra — output-identical, unit-pinned):
-
-    - ``"inline"``: entirely map-side over literal codewords, the
-      :func:`ivf_assign` zero-shuffle discipline — but the plan carries
-      m×n_codes×(dim/m) literals, which hits Catalyst's plan-size
-      ceiling at production dials (VERDICT r12 #3: m=16, 256 codes,
-      dim=1024 → 262k literals).
-    - ``"broadcast"``: the codebook rides a ``BroadcastExchange`` as a
-      tiny DataFrame and the argmin is one partial aggregation — ZERO
-      plan literals at any dial (plan-asserted at m=16/k=256/dim=512).
-    - ``"auto"`` (default): inline up to ``PQ_INLINE_MAX_LITERALS``
-      total codebook floats, broadcast past it."""
-    if _resolve_pq_strategy(pq_strategy, codebooks) == "broadcast":
-        return _pq_encode_broadcast(
-            corpus, codebooks, m, id_col, vec_col, dim, keep or []
-        )
-    sub = dim // m
-    out = []
-    for s in range(m):
-        entries = [
-            F.struct(
-                _pq_subdist(vec_col, s, sub, cvals).alias("dist"),
-                F.lit(code).alias("code"),
-            )
-            for (ss, code, cvals) in codebooks
-            if ss == s
+    REQUIRES unique (id_col, *keep) rows: the argmin is a group-by over
+    those columns, so exact duplicate ids MERGE to one output row.
+    Dedup ids first (every caller in this package feeds unique vector
+    ids)."""
+    keep = keep or []
+    scored = _pq_subspace_dists(
+        corpus, codebooks, vec_col, [id_col, *keep], m, dim
+    )
+    agg = scored.groupBy(id_col, *keep).agg(
+        *[
+            F.min(
+                F.when(
+                    F.col("__s") == s,
+                    F.struct(
+                        F.col("__d").alias("dist"),
+                        F.col("__cb_code").alias("code"),
+                    ),
+                )
+            )["code"].alias(f"code_{s}")
+            for s in range(m)
         ]
-        out.append(F.array_sort(F.array(*entries))[0]["code"].alias(f"code_{s}"))
-    return corpus.select(id_col, *out, *(keep or []))
+    )
+    return agg.select(id_col, *[f"code_{s}" for s in range(m)], *keep)
 
 
 def pq_refine_codebooks(
@@ -4389,22 +4241,26 @@ def pq_refine_codebooks(
     """Lloyd-refine PQ codebooks per subspace (VERDICT r11 "Next round"
     #4 — the upgrade :func:`pq_codebooks`'s docstring promised): each
     iteration assigns every corpus sub-vector to its nearest codeword
-    (:func:`pq_encode` — map-side argmin over the inlined books) and
-    replaces each codeword with the DECIMAL-exact mean of its members,
-    the standard k-means update run independently in all ``m``
+    and replaces each codeword with the DECIMAL-exact mean of its
+    members, the standard k-means update run independently in all ``m``
     subspaces AT ONCE. A codeword with no members keeps its previous
     value (k-means' empty-cluster convention — deterministic, and the
     oracle restates it as a NOT-IN union).
 
-    One distributed pass per iteration, no corpus shuffle of vectors:
-    the encode is a projection, the member components explode to
-    (s, code, i) key-only rows map-side, and partial aggregation
-    collapses every partition to ≤ m·k·(dim/m) = k·dim mean cells
-    before the single exchange — the :func:`embedding_covariance`
-    shape. Means follow the engine-portable contract
-    (:func:`_decimal_mean_vectors`): exact DECIMAL(28,12) component
-    sum → double → one IEEE division, bit-identical in the oracle's
-    restatement. The collect is m·k·(dim/m) doubles (the same
+    One distributed pass per iteration: the argmin runs per (id,
+    SUBSPACE) with SCALAR group keys over the broadcast codebook join
+    (:func:`_pq_subspace_dists` — the same min over struct(dist, code)
+    as :func:`pq_encode`, so the same tie order), the subspace slice
+    rides along as the member payload, and ``posexplode(slice)`` feeds
+    the (s, code, i) mean cells directly; partial aggregation collapses
+    every partition to ≤ m·k·(dim/m) = k·dim mean cells before the
+    exchange — the :func:`embedding_covariance` shape. Grouping by
+    scalar keys keeps the aggregate on the codegen hash-aggregate fast
+    path (a group-by over the full vector array measured 8.7 s vs
+    4.8 s on the floor-dial fan-out). Means follow the engine-portable
+    contract (:func:`_decimal_mean_vectors`): exact DECIMAL(28,12)
+    component sum → double → one IEEE division, bit-identical in the
+    oracle's restatement. The collect is m·k·(dim/m) doubles (the same
     driver-side codebook size :func:`pq_codebooks` already returns).
 
     Returns codebooks in the :func:`pq_codebooks` format, so
@@ -4412,66 +4268,25 @@ def pq_refine_codebooks(
     sub = dim // m
     books = codebooks
     for _ in range(iters):
-        if _resolve_pq_strategy("auto", books) == "broadcast":
-            # One-pass broadcast shape (r15): argmin per (id, SUBSPACE)
-            # with SCALAR group keys, the subspace slice carried as the
-            # member payload, then posexplode(slice) straight into the
-            # decimal mean cells. The previous form routed through
-            # pq_encode(keep=[vec_col]) — an aggregation GROUPED BY THE
-            # FULL VECTOR ARRAY (complex-type keys fall out of the
-            # codegen hash-aggregate fast path; measured 8.7 s vs 4.8 s
-            # on the floor-dial fan-out) — and then re-exploded the raw
-            # vector into m×sub struct literals per row. Same argmin
-            # (min over struct(dist, code) — identical tie order), same
-            # decimal(28,12) mean over the same member components:
-            # bit-identical books, one aggregation instead of two
-            # passes (15.2 s → 3.8 s at the floor gate's m=16×256).
-            cb = _pq_codebook_df(corpus.sparkSession, books)
-            segs = _pq_segments(
-                ensure_parallelism(corpus), vec_col, [id_col], m, sub
-            )
-            scored = segs.join(
-                F.broadcast(cb), F.col("__s") == F.col("__cb_s")
-            ).withColumn(
-                "__d", _pq_sqdist(F.col("__seg"), F.col("__cb_cvec"), sub=sub)
-            )
-            enc = scored.groupBy(id_col, "__s").agg(
-                F.min(
-                    F.struct(
-                        F.col("__d").alias("dist"),
-                        F.col("__cb_code").alias("code"),
-                    )
-                )["code"].alias("code"),
-                # __seg is functionally determined by the group key —
-                # every member row carries the identical slice
-                F.first("__seg").alias("__seg"),
-            )
-            mean_src = enc.select(
-                F.col("__s").alias("s"),
-                "code",
-                F.posexplode("__seg").alias("i", "v"),
-            ).select("s", "code", "i", F.col("v").cast("double").alias("v"))
-        else:
-            # inline books: the encode is a pure literal projection
-            # (cheap by construction at ≤ PQ_INLINE_MAX_LITERALS) — keep
-            # the original explode-cells shape
-            coded = pq_encode(
-                ensure_parallelism(corpus), books, m, id_col, vec_col, dim,
-                keep=[vec_col],
-            )
-            cells = [
+        scored = _pq_subspace_dists(
+            ensure_parallelism(corpus), books, vec_col, [id_col], m, dim
+        )
+        enc = scored.groupBy(id_col, "__s").agg(
+            F.min(
                 F.struct(
-                    F.lit(s).alias("s"),
-                    F.col(f"code_{s}").alias("code"),
-                    F.lit(j).alias("i"),
-                    F.col(vec_col)[s * sub + j].cast("double").alias("v"),
+                    F.col("__d").alias("dist"),
+                    F.col("__cb_code").alias("code"),
                 )
-                for s in range(m)
-                for j in range(sub)
-            ]
-            mean_src = coded.select(
-                F.explode(F.array(*cells)).alias("__c")
-            ).select("__c.s", "__c.code", "__c.i", "__c.v")
+            )["code"].alias("code"),
+            # __seg is functionally determined by the group key —
+            # every member row carries the identical slice
+            F.first("__seg").alias("__seg"),
+        )
+        mean_src = enc.select(
+            F.col("__s").alias("s"),
+            "code",
+            F.posexplode("__seg").alias("i", "v"),
+        ).select("s", "code", "i", F.col("v").cast("double").alias("v"))
         means = (
             mean_src.groupBy("s", "code", "i")
             .agg(
@@ -4518,18 +4333,7 @@ def pq_code_census(
     (s, code) key-only rows, partial-agg counts, two tiny exchanges
     (≤ m×n_codes rows) — safe to run on the full corpus at any
     scale."""
-    pairs = codes.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"), F.col(f"code_{s}").alias("code")
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("__c")
-    ).select(F.col("__c.s").alias("s"), F.col("__c.code").alias("code"))
+    pairs = _pq_code_rows(codes, m, [])
     counts = pairs.groupBy("s", "code").agg(
         F.count(F.lit(1)).alias("__n")
     )
@@ -4558,7 +4362,6 @@ def pq_adc_topk(
     dim: int = 64,
     exclude_self: bool = True,
     refine_iters: int = 0,
-    pq_strategy: str = "auto",
 ) -> DataFrame:
     """Asymmetric-distance PQ top-k: the corpus is scanned as codes only
     (m ints/vector), each query precomputes an m×n_codes lookup table of
@@ -4587,33 +4390,18 @@ def pq_adc_topk(
         books = pq_refine_codebooks(
             corpus, books, m, id_col, vec_col, dim, iters=refine_iters
         )
-    strategy = _resolve_pq_strategy(pq_strategy, books)
     codes = pq_encode(
-        ensure_parallelism(corpus), books, m, id_col, vec_col, dim,
-        pq_strategy=strategy,
+        ensure_parallelism(corpus), books, m, id_col, vec_col, dim
     )
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
     )
-    lut = _pq_lut(q, books, m, dim, query_id_col, strategy)
-    code_rows = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"code_{s}").alias("code"))
-                    for s in range(m)
-                ]
-            )
-        ).alias("__c"),
-    ).select(id_col, F.col("__c.s").alias("s"), F.col("__c.code").alias("code"))
-    scored = (
-        code_rows.join(F.broadcast(lut), ["s", "code"])
-        .filter(
-            F.col(query_id_col) != F.col(id_col) if exclude_self else F.lit(True)
-        )
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum(F.col("dist").cast(DEC)).cast("double").alias("adc_dist"))
+    lut = _pq_lut(q, books, m, dim, query_id_col)
+    scored = _adc_sum(
+        _pq_code_rows(codes, m, [id_col]).join(
+            F.broadcast(lut), ["s", "code"]
+        ),
+        query_id_col, id_col, exclude_self,
     )
     return top_k_per_group(
         scored, [query_id_col], "adc_dist", k, descending=False, tiebreak=[id_col]
@@ -4635,7 +4423,6 @@ def ivf_pq_topk(
     exclude_self: bool = True,
     dim: int = 64,
     refine_iters: int = 0,
-    pq_strategy: str = "auto",
     rerank_k: int | None = None,
     residual: bool = False,
 ) -> DataFrame:
@@ -4652,7 +4439,8 @@ def ivf_pq_topk(
     codes are tuned independently.
 
     Physical shape at 100 TB, stage by stage: (1) codebooks are
-    driver-side m×n_codes literals (:func:`pq_codebooks`, optionally
+    driver-side m×n_codes codewords that reach the executors through a
+    broadcast join (:func:`pq_codebooks`, optionally
     Lloyd-refined — ``refine_iters`` passes through
     :func:`pq_refine_codebooks`); (2) the corpus is scanned ONCE into
     key-only (id, cent_id) ⋈ (id, s, code) rows — after encoding, raw
@@ -4753,27 +4541,8 @@ def ivf_pq_topk(
         books = pq_refine_codebooks(
             enc_corpus, books, m, id_col, vec_col, dim, iters=refine_iters
         )
-    strategy = _resolve_pq_strategy(pq_strategy, books)
     codes = pq_encode(
-        enc_corpus, books, m, id_col, vec_col, dim, keep=["cent_id"],
-        pq_strategy=strategy,
-    )
-    code_rows = codes.select(
-        id_col,
-        "cent_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"), F.col(f"code_{s}").alias("code")
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("__c"),
-    ).select(
-        id_col, "cent_id",
-        F.col("__c.s").alias("s"), F.col("__c.code").alias("code"),
+        enc_corpus, books, m, id_col, vec_col, dim, keep=["cent_id"]
     )
     q = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
@@ -4782,29 +4551,10 @@ def ivf_pq_topk(
         q, centroids, "__qvec", query_id_col, n_probe=n_probe,
         cents_rows=cents_rows,
     )
-    if residual:
-        # one LUT per (query, probed cell) from the query's residual
-        # against THAT cell's mean; the (query, cell) keying makes
-        # the LUT join itself the probe restriction
-        qcells = _ivf_residuals(probes, mean_cents, "__qvec").select(
-            query_id_col, "cent_id", F.col("__rvec").alias("__qvec")
-        )
-        lut = _pq_lut(
-            qcells, books, m, dim, query_id_col, strategy,
-            extra_keys=["cent_id"],
-        )
-        matched = code_rows.join(F.broadcast(lut), ["cent_id", "s", "code"])
-    else:
-        lut = _pq_lut(q, books, m, dim, query_id_col, strategy)
-        matched = code_rows.join(
-            F.broadcast(probes.select(query_id_col, "cent_id")), "cent_id"
-        ).join(F.broadcast(lut), [query_id_col, "s", "code"])
-    scored = (
-        matched.filter(
-            F.col(query_id_col) != F.col(id_col) if exclude_self else F.lit(True)
-        )
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum(F.col("dist").cast(DEC)).cast("double").alias("adc_dist"))
+    scored = _ivf_adc_scores(
+        _pq_code_rows(codes, m, [id_col, "cent_id"]), q, probes, books, m,
+        dim, id_col, query_id_col, exclude_self,
+        mean_cents if residual else None,
     )
     if rerank_k is None:
         return top_k_per_group(
@@ -4981,7 +4731,7 @@ def semdedup(
     # self-join plus the survivor anti-join); without materialization Spark
     # re-evaluates the nearest-centroid projection once per branch.
     # persist(MEMORY_AND_DISK) caches it so the corpus is assigned exactly
-    # once — and, unlike the earlier lazy localCheckpoint, keeps lineage:
+    # once — and, unlike a lazy localCheckpoint, keeps lineage:
     # on a multi-executor cluster a lost executor RECOMPUTES the missing
     # partitions instead of failing the job (an unreplicated local
     # checkpoint is unrecoverable), and there is no first-action recompute

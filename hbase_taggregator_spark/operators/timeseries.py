@@ -170,32 +170,43 @@ class TimeseriesQuery:
         Equivalent to ``window(ts, ival, startTime=t_min % ival)`` but
         avoids the struct build; integer ``div`` keeps exactness for any
         epoch range."""
-        us = F.unix_micros(F.col(self.ts_col))
         idx = F.expr(
             f"(unix_micros(`{self.ts_col}`) - {self.t_min_us}) div {self.interval_us}"
         )
-        del us
         return (F.lit(self.t_min_us) + idx * F.lit(self.interval_us)).alias(
             "bucket_start_us"
         )
 
-    def _bucketed(self, aggs: Iterable[tuple[str, str]]) -> DataFrame:
-        """filter → project bucket → groupBy → agg → orderBy."""
-        self._check()
+    def _bucket_agg(
+        self, agg_cols: list[Column], cols: list[str] | None = None
+    ) -> DataFrame:
+        """filter → project bucket → groupBy → agg → orderBy: the one
+        chain behind the verbs and :meth:`aggregate`. ``cols`` selects the
+        output columns before the sort; without it they are the group
+        keys, the aggregates, then ``bucket_start``."""
         us = F.unix_micros(F.col(self.ts_col))
         lo, hi = self.t_min_us, self.upper_bound_us()
-        agg_exprs = [_VERB_EXPRS[verb](self.value_col).alias(alias) for verb, alias in aggs]
         out = (
             self.df.filter((us >= F.lit(lo)) & (us < F.lit(hi)))
             .withColumn("bucket_start_us", self.bucket_start_us())
             .groupBy("bucket_start_us", *self.dims)
-            .agg(*agg_exprs)
+            .agg(*agg_cols)
             .withColumn("bucket_start", F.timestamp_micros(F.col("bucket_start_us")))
-            .select("bucket_start", "bucket_start_us", *self.dims,
-                    *[alias for _, alias in aggs])
-            .orderBy("bucket_start_us", *self.dims)
         )
-        return out
+        if cols is not None:
+            out = out.select(*cols)
+        return out.orderBy("bucket_start_us", *self.dims)
+
+    def _bucketed(self, aggs: Iterable[tuple[str, str]]) -> DataFrame:
+        """The verbs' query: (bucket_start, bucket_start_us, *dims,
+        *aliases) over the named verbs."""
+        self._check()
+        aggs = list(aggs)
+        return self._bucket_agg(
+            [_VERB_EXPRS[verb](self.value_col).alias(alias) for verb, alias in aggs],
+            ["bucket_start", "bucket_start_us", *self.dims,
+             *[alias for _, alias in aggs]],
+        )
 
     # -- verbs (reference parity: the five RPC endpoints) --------------
     def max(self, alias: str = "max") -> DataFrame:
@@ -229,16 +240,7 @@ class TimeseriesQuery:
         (decimal-exact sums, percentiles, sketches…). Same single-pass
         partial/final physical shape."""
         self._check_range_only()
-        us = F.unix_micros(F.col(self.ts_col))
-        lo, hi = self.t_min_us, self.upper_bound_us()
-        return (
-            self.df.filter((us >= F.lit(lo)) & (us < F.lit(hi)))
-            .withColumn("bucket_start_us", self.bucket_start_us())
-            .groupBy("bucket_start_us", *self.dims)
-            .agg(*agg_cols)
-            .withColumn("bucket_start", F.timestamp_micros(F.col("bucket_start_us")))
-            .orderBy("bucket_start_us", *self.dims)
-        )
+        return self._bucket_agg(list(agg_cols))
 
     def agg(self, **aliases: str) -> DataFrame:
         """Several verbs in one single-scan pass, e.g.

@@ -13,9 +13,8 @@ PQ gate was row-algebra-pinned, so a refactor that degrades retrieval
 (bad refinement, LUT drift, probe off-by-one) kept all hashes green.
 The committed operating point was PRICED by the r13 census
 (tools/bench_pq_r13.json + the rerank sweep): m=16 × 256 codewords
-(128-bit codes — past ``PQ_INLINE_MAX_LITERALS``, so this gate drives
-the BROADCAST codebook strategy in production form) with the
-corpus-proportional 4% shortlist reads mean recall@5 of 0.94 / 0.92 /
+(128-bit codes — the broadcast codebook join at production dials) with
+the corpus-proportional 4% shortlist reads mean recall@5 of 0.94 / 0.92 /
 1.00 at sf0.001 / 0.01 / 0.1; the committed floor is 0.8. The oracle
 pins the PASS verdict row (the percentile-gate pattern — the
 approximation is CHECKED, not reproduced). r14 re-dialed the committed
@@ -190,12 +189,12 @@ _register(
 
 def _q_ivf_pq_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Standing retrieval-quality floor on the IVFADC+R stack at the
-    censused production point (m=16 × 256 RESIDUAL codewords — the
-    broadcast codebook strategy — one Lloyd refinement, 4/16 probes,
-    FIXED rerank_k=100): mean recall@5 vs exact Euclidean top-k must
-    clear 0.8. The r14 re-dial (tools/bench_pq_residual_r14.json)
-    retired the r13 corpus-proportional shortlist: the fixed budget
-    reads the same recall at every measured sf, and the gate no longer
+    censused production point (m=16 × 256 RESIDUAL codewords, one
+    Lloyd refinement, 4/16 probes, FIXED rerank_k=100): mean recall@5
+    vs exact Euclidean top-k must clear 0.8. The r14 re-dial
+    (tools/bench_pq_residual_r14.json) retired the r13
+    corpus-proportional shortlist: the fixed budget reads the same
+    recall at every measured sf, and the gate no longer
     institutionalizes an O(corpus)-per-query second pass. The
     approximation is CHECKED, not reproduced — the oracle pins the
     verdict row."""

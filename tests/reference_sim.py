@@ -1,8 +1,10 @@
-"""Pure-Python simulator of the reference's bucket algebra — the in-test
-oracle for golden parity.
+"""Pure-Python simulators used as in-test oracles: the reference's bucket
+algebra (golden parity), and independent restatements of the operators
+whose output has no SQL oracle in the tests (LTTB, repeated substrings,
+two-level IVF assignment, PQ encode / refine / ADC).
 
-Re-implements, from the structural survey (SURVEY.md §2.3), exactly what the
-coprocessor computes:
+The bucket simulator re-implements, from the structural survey (SURVEY.md
+§2.3), exactly what the coprocessor computes:
 
 - bucket list: do-while from t_min stepping by interval, appending the next
   range BEFORE testing `next.max <= t_max`, so one trailing bucket past
@@ -152,4 +154,125 @@ def repeated_substring_reference(
     for d, tk in toks.items():
         kept = [t for i, t in enumerate(tk, 1) if i not in covered[d]]
         out[d] = (" ".join(kept), len(tk), len(tk) - len(kept))
+    return out
+
+
+def _cos_or_none(a, b):
+    """Cosine, or None for a zero denominator — the engine scores a
+    zero-norm vector NULL, and NULL sorts FIRST in its ascending
+    (negcos, id) order."""
+    import math
+
+    den = math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
+    if den == 0:
+        return None
+    return sum(x * y for x, y in zip(a, b)) / den
+
+
+def cosine_order(v, vecs: dict) -> list:
+    """Keys of ``vecs`` by descending cosine to ``v``, ties by key, NULL
+    scores (zero norms) first."""
+
+    def key(c):
+        cos = _cos_or_none(v, vecs[c])
+        return (cos is not None, -cos if cos is not None else 0.0, c)
+
+    return sorted(vecs, key=key)
+
+
+def two_level_reference(vecs, cvecs, n_super, n_super_probe, n_probe):
+    """Independent pure-Python reference for
+    ``similarity.ivf_assign_two_level`` (plain float math — the
+    fixtures have no near-ties, so float vs decimal cannot flip a
+    ranking): block means over cent_id-ranked blocks, nearest-super
+    membership, probing, exact candidate top-n_probe. Zero-norm vectors
+    score NULL and so probe the first supers and take the first
+    candidates by id. Returns {vec_id: [cent_id, ...]}."""
+    nlist = len(cvecs)
+    dim = len(next(iter(cvecs.values())))
+    order = sorted(cvecs)
+    blocks = {cid: (rank * n_super) // nlist for rank, cid in enumerate(order)}
+    supers = {}
+    for b in range(n_super):
+        mv = [cvecs[c] for c, blk in blocks.items() if blk == b]
+        if mv:
+            supers[b] = [sum(v[d] for v in mv) / len(mv) for d in range(dim)]
+    member_of = {c: cosine_order(cvecs[c], supers)[0] for c in cvecs}
+    expected = {}
+    for vid, v in vecs.items():
+        probed = cosine_order(v, supers)[:n_super_probe]
+        cands = {c: cvecs[c] for c in cvecs if member_of[c] in probed}
+        top = cosine_order(v, cands)[:n_probe]
+        if top:
+            expected[vid] = top
+    return expected
+
+
+def pq_encode_reference(vecs: dict, books, m: int) -> dict:
+    """NumPy reference for ``similarity.pq_encode``: per subspace, the
+    squared-L2 argmin over that subspace's codewords, ties broken by
+    code id. ``books`` is the [(subspace, code_id, sub_vector)] list.
+    Returns {vec_id: [code_0, ..., code_{m-1}]}."""
+    import numpy as np
+
+    ids = sorted(vecs)
+    x = np.array([vecs[i] for i in ids], dtype=np.float64)
+    sub = x.shape[1] // m
+    codes = np.zeros((len(ids), m), dtype=np.int64)
+    for s in range(m):
+        cw = sorted((code, vals) for (ss, code, vals) in books if ss == s)
+        c = np.array([vals for _, vals in cw], dtype=np.float64)
+        d = ((x[:, None, s * sub : (s + 1) * sub] - c[None]) ** 2).sum(-1)
+        # argmin returns the first minimum: codewords are in code order
+        codes[:, s] = [cw[j][0] for j in d.argmin(axis=1)]
+    return {i: [int(c) for c in codes[n]] for n, i in enumerate(ids)}
+
+
+def pq_refine_reference(vecs: dict, books, m: int) -> list:
+    """One Lloyd pass of ``similarity.pq_refine_codebooks``: encode,
+    then replace each codeword by the mean of its member sub-vectors (a
+    codeword with no members keeps its value)."""
+    codes = pq_encode_reference(vecs, books, m)
+    sub = len(next(iter(vecs.values()))) // m
+    out = []
+    for s, code, old in books:
+        members = [
+            vecs[i][s * sub : (s + 1) * sub]
+            for i, c in codes.items()
+            if c[s] == code
+        ]
+        if members:
+            old = [sum(col) / len(members) for col in zip(*members)]
+        out.append((s, code, [float(v) for v in old]))
+    return out
+
+
+def pq_adc_reference(
+    queries: dict, codes: dict, books, m: int, k: int, candidates=None
+) -> dict:
+    """NumPy reference for the ADC ranking: per query, a lookup table of
+    exact subspace squared distances to every codeword, a candidate's
+    distance is the sum of its m table entries, and the top-k runs
+    ascending with ties by id; the query's own id is excluded.
+    ``candidates`` maps a query id to its allowed ids (IVF probing);
+    None allows every coded id. Returns {query_id: [(id, adc), ...]}."""
+    import numpy as np
+
+    out = {}
+    for qid, qv in queries.items():
+        q = np.asarray(qv, dtype=np.float64)
+        sub = len(q) // m
+        lut = {
+            (s, code): float(
+                ((q[s * sub : (s + 1) * sub] - np.asarray(vals)) ** 2).sum()
+            )
+            for (s, code, vals) in books
+        }
+        allowed = codes if candidates is None else candidates[qid]
+        scored = sorted(
+            (sum(lut[(s, codes[i][s])] for s in range(m)), i)
+            for i in allowed
+            if i != qid
+        )
+        out[qid] = [(i, d) for d, i in scored[:k]]
     return out

@@ -1,12 +1,12 @@
 """Round-10 regression tests (VERDICT r9 "Next round" + ADVICE):
 
-- the two-level top-k aggregation is SALTED two-stage by default: no
-  partial collect_list buffer ever holds the full per-vector candidate
-  list (stage 1 groups by (vec_id, pmod(hash(cent_id), salt)) and
-  slices to n_probe BEFORE the exchange; stage 2 merges ≤ salt·n_probe
-  survivors) — pinned equal to the legacy single-aggregate shape, and
-  plan-asserted KEY-ONLY (the collect_list aggregates never see the
-  vector payload);
+- the two-level top-k aggregation is SALTED two-stage: no partial
+  collect_list buffer ever holds the full per-vector candidate list
+  (stage 1 groups by (vec_id, pmod(hash(cent_id), salt)) and slices to
+  n_probe BEFORE the exchange; stage 2 merges ≤ salt·n_probe
+  survivors) — pinned equal to the one-salt (single-aggregate) shape,
+  and plan-asserted KEY-ONLY (the collect_list aggregates never see
+  the vector payload);
 - the two-level retrieval recall@5 gate returns sane values (the oracle
   hash match is the driver's job; the shape contract is ours);
 - random_projection derives ``dim`` from the data when not given (r9
@@ -41,11 +41,13 @@ def _toy_vectors(spark, n=40, dim=8):
 # --- salted two-stage top-k (VERDICT r9 "What's wrong" #1) ------------------
 
 
-def test_salted_topk_equals_legacy_single_aggregate(spark):
+def test_salted_topk_equals_legacy_single_aggregate(spark, monkeypatch):
     """The salted merge is EXACT (every candidate lands in exactly one
     salt group; any global top-k member is its own salt's top-k member),
-    so topk_salt must not change results — membership and multiplicity —
-    at several salt counts, including salt > distinct-cent count."""
+    so the salt count (``_TOPK_SALT``) must not change results —
+    membership and multiplicity — at several salt counts, including one
+    salt (a single aggregate per vector) and salt > distinct-cent
+    count."""
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _toy_vectors(spark, n=50, dim=8)
@@ -54,19 +56,18 @@ def test_salted_topk_equals_legacy_single_aggregate(spark):
     )
 
     def run(salt):
+        monkeypatch.setattr(S, "_TOPK_SALT", salt)
         return sorted(
             (r["vec_id"], r["cent_id"])
             for r in S.ivf_assign_two_level(
-                emb, cents, n_super=4, n_super_probe=3, n_probe=3,
-                topk_salt=salt,
+                emb, cents, n_super=4, n_super_probe=3, n_probe=3
             ).collect()
         )
 
-    legacy = run(1)
-    assert legacy == run(4) == run(16) == run(64)
+    assert run(1) == run(4) == run(16) == run(64)
 
 
-def test_salted_topk_collect_list_aggregates_are_key_only(spark):
+def test_salted_topk_collect_list_aggregates_are_key_only(spark, monkeypatch):
     """The SALTED stage aggregates must group KEY-ONLY rows — (id,
     salt, small struct) — never the vector payload: the whole point
     of the salt is to cap partial buffers, and a vec column riding
@@ -83,8 +84,9 @@ def test_salted_topk_collect_list_aggregates_are_key_only(spark):
     cents = emb.filter(F.col("vec_id") < 64).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
     )
+    monkeypatch.setattr(S, "_TOPK_SALT", 8)
     out = S.ivf_assign_two_level(
-        emb, cents, n_super=8, n_super_probe=4, n_probe=5, topk_salt=8
+        emb, cents, n_super=8, n_super_probe=4, n_probe=5
     )
     text = P.formatted_plan(out)
     sections = text.split("\n\n")

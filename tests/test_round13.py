@@ -1,13 +1,11 @@
 """Round-13 regression tests (VERDICT r12 "Next round" + r12 ADVICE):
 
-- the PQ broadcast strategy (VERDICT r12 #3/#4): past
-  ``PQ_INLINE_MAX_LITERALS`` codebook floats, ``pq_encode`` and the
-  ADC LUT ship the codebooks via a BroadcastExchange instead of plan
-  literals — ZERO codeword literals at production dials (plan-asserted
-  at m=16 × 256 codes × dim=512, where inline would inline 262k
-  doubles and hit the Catalyst plan-size ceiling the IVF family
-  documented), while running the identical decimal algebra — pinned
-  output-identical to inline on the real fixture.
+- PQ encode and the ADC LUT ship the codebooks via a BroadcastExchange
+  instead of plan literals (VERDICT r12 #3/#4) — ZERO codeword
+  literals at production dials (plan-asserted at m=16 × 256 codes ×
+  dim=512, where literal codewords would put 131k doubles into the
+  plan) — and encode, flat ADC and the IVFADC stack match a NumPy
+  reference on the real fixture.
 - ``pq_code_census`` (VERDICT r12 #5): the dup-collapse detector
   fires (top_code_share ≈ 1) on a copy-block corpus and stays silent
   on the regular fixture.
@@ -34,68 +32,100 @@ def _rows(df, *cols):
 # --- PQ broadcast strategy (zero plan literals) ------------------------------
 
 
-def test_pq_strategy_resolution_and_validation():
-    from hbase_taggregator_spark.operators import similarity as S
-
-    small = [(0, 0, [0.0] * 16)] * 4  # 64 floats
-    big = [(s, c, [0.0] * 32) for s in range(16) for c in range(256)]
-    assert S._resolve_pq_strategy("auto", small) == "inline"
-    assert S._resolve_pq_strategy("auto", big) == "broadcast"
-    assert S._resolve_pq_strategy("inline", big) == "inline"
-    assert S._resolve_pq_strategy("broadcast", small) == "broadcast"
-    with pytest.raises(ValueError, match="unknown pq_strategy"):
-        S._resolve_pq_strategy("arrow", small)
+def _vecs(df, id_col="vec_id"):
+    return {r[id_col]: [float(x) for x in r["embedding"]] for r in df.collect()}
 
 
-def test_pq_broadcast_output_identical_to_inline(spark):
-    """Both strategies run the same decimal algebra — encode, flat ADC,
-    and the composed IVFADC stack must be row-identical on the real
-    fixture (refined books included, so the refine loop's encode is
-    covered through pq_refine_codebooks)."""
+def test_pq_encode_and_adc_match_numpy_reference(spark):
+    """Encode, flat ADC and the composed IVFADC stack must match the
+    NumPy reference on the real fixture: per-subspace squared-L2
+    argmin with ties by code id, ADC sums over the query LUT, top-k
+    ascending with ties by id (refined books included, so the refine
+    loop is covered through pq_refine_codebooks)."""
+    from reference_sim import (
+        cosine_order,
+        pq_adc_reference,
+        pq_encode_reference,
+        pq_refine_reference,
+    )
+
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
+    vecs = _vecs(emb)
     books = S.pq_codebooks(emb, 4, 16)
-    a = S.pq_encode(emb, books, 4, pq_strategy="inline")
-    b = S.pq_encode(emb, books, 4, pq_strategy="broadcast")
-    cols = a.columns
-    assert b.columns == cols
-    assert _rows(a, *cols) == _rows(b, *cols)
+    codes = S.pq_encode(emb, books, 4)
+    assert codes.columns == ["vec_id", "code_0", "code_1", "code_2", "code_3"]
+    ref_codes = pq_encode_reference(vecs, books, 4)
+    got = {r["vec_id"]: [r[f"code_{s}"] for s in range(4)]
+           for r in codes.collect()}
+    assert got == ref_codes
+
     q = emb.filter(F.col("vec_id") < 5)
-    x = S.pq_adc_topk(emb, q, k=5, pq_strategy="inline")
-    y = S.pq_adc_topk(emb, q, k=5, pq_strategy="broadcast")
-    assert _rows(x, *x.columns) == _rows(y, *y.columns)
-    u = S.ivf_pq_topk(emb, q, k=5, refine_iters=1, pq_strategy="inline")
-    v = S.ivf_pq_topk(emb, q, k=5, refine_iters=1, pq_strategy="broadcast")
-    assert _rows(u, *u.columns) == _rows(v, *v.columns)
+    qvecs = {i: vecs[i] for i in range(5)}
+
+    def check(df, expected):
+        got = {}
+        for r in df.collect():
+            got.setdefault(r["query_id"], []).append(
+                (r["vec_id"], r["adc_dist"])
+            )
+        assert sorted(got) == sorted(expected)
+        for qid, exp in expected.items():
+            row = sorted(got[qid], key=lambda t: (t[1], t[0]))
+            assert [i for i, _ in row] == [i for i, _ in exp], qid
+            for (_, d), (_, e) in zip(row, exp):
+                assert d == pytest.approx(e, rel=1e-9, abs=1e-12)
+
+    check(
+        S.pq_adc_topk(emb, q, k=5),
+        pq_adc_reference(qvecs, ref_codes, books, 4, 5),
+    )
+
+    # IVFADC: cells = the first 16 vectors, cosine-assigned; books are
+    # sampled from the first 16 vectors and Lloyd-refined once
+    cvecs = {i: vecs[i] for i in range(16)}
+    cell = {i: cosine_order(v, cvecs)[0] for i, v in vecs.items()}
+    rbooks = pq_refine_reference(vecs, books, 4)
+    rcodes = pq_encode_reference(vecs, rbooks, 4)
+    cands = {}
+    for qid, qv in qvecs.items():
+        probed = set(cosine_order(qv, cvecs)[:4])
+        cands[qid] = [i for i in vecs if cell[i] in probed]
+    check(
+        S.ivf_pq_topk(emb, q, k=5, refine_iters=1),
+        pq_adc_reference(qvecs, rcodes, rbooks, 4, 5, candidates=cands),
+    )
 
 
 def test_pq_broadcast_keep_columns_ride_through(spark):
-    """The broadcast encode must carry `keep` columns (the refine
-    loop's vector payload, the composed stack's cent_id) in the same
-    positions as inline."""
+    """The encode must carry `keep` columns (the composed stack's
+    cent_id, or any payload) after the codes, unchanged, next to the
+    reference codes."""
+    from reference_sim import pq_encode_reference
+
     from hbase_taggregator_spark.operators import similarity as S
 
     emb = _emb(spark)
+    vecs = _vecs(emb)
     books = S.pq_codebooks(emb, 4, 16)
-    a = S.pq_encode(emb, books, 4, keep=["embedding"], pq_strategy="inline")
-    b = S.pq_encode(
-        emb, books, 4, keep=["embedding"], pq_strategy="broadcast"
-    )
-    assert a.columns == b.columns
-    ra = sorted((r["vec_id"], r["code_0"], tuple(r["embedding"]))
-                for r in a.collect())
-    rb = sorted((r["vec_id"], r["code_0"], tuple(r["embedding"]))
-                for r in b.collect())
-    assert ra == rb
+    a = S.pq_encode(emb, books, 4, keep=["embedding"])
+    assert a.columns == [
+        "vec_id", "code_0", "code_1", "code_2", "code_3", "embedding"
+    ]
+    ref = pq_encode_reference(vecs, books, 4)
+    rows = a.collect()
+    assert len(rows) == len(vecs)
+    for r in rows:
+        assert [float(x) for x in r["embedding"]] == vecs[r["vec_id"]]
+        assert [r[f"code_{s}"] for s in range(4)] == ref[r["vec_id"]]
 
 
 def test_pq_broadcast_plan_has_zero_literals_at_production_dials(spark):
-    """The point of the strategy (VERDICT r12 #3): at m=16 × 256 codes
-    × dim=512 the inline plan would carry 131k codeword literals (262k
-    at dim=1024) — past Catalyst's practical plan ceiling. The
-    broadcast plan must be small, literal-free, JVM-only, and join the
-    codebook via BroadcastExchange."""
+    """VERDICT r12 #3: at m=16 × 256 codes × dim=512 a literal-codeword
+    plan would carry 131k literals (262k at dim=1024) — past Catalyst's
+    practical plan ceiling. The plan must be small, literal-free,
+    JVM-only, and join the codebook via BroadcastExchange."""
     from hbase_taggregator_spark.operators import similarity as S
 
     M, K, DIM = 16, 256, 512
@@ -113,7 +143,7 @@ def test_pq_broadcast_plan_has_zero_literals_at_production_dials(spark):
         for s in range(M)
         for c in range(K)
     ]
-    enc = S.pq_encode(corpus, books, M, dim=DIM)  # auto -> broadcast
+    enc = S.pq_encode(corpus, books, M, dim=DIM)
     plan = enc._jdf.queryExecution().executedPlan().toString()
     assert "123456789" not in plan
     assert "BroadcastHashJoin" in plan
@@ -123,7 +153,7 @@ def test_pq_broadcast_plan_has_zero_literals_at_production_dials(spark):
     q = corpus.limit(2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qvec")
     )
-    lut = S._pq_lut(q, books, M, DIM, "query_id", "broadcast")
+    lut = S._pq_lut(q, books, M, DIM, "query_id")
     lplan = lut._jdf.queryExecution().executedPlan().toString()
     assert "123456789" not in lplan and "Python" not in lplan
 

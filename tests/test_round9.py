@@ -25,6 +25,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from reference_sim import two_level_reference
 
 from hbase_taggregator_spark import plans as P
 
@@ -80,44 +81,6 @@ def test_two_level_single_partition_exchanges_are_key_only(spark):
 # --- two-level n_probe > 1 (closes the r8-declared API hole) ----------------
 
 
-def _py_two_level(vecs, cvecs, n_super, n_super_probe, n_probe):
-    """Independent pure-Python two-level reference (plain float math —
-    the fixtures have no near-ties, so float vs decimal cannot flip a
-    ranking): block means, nearest-super membership, probing, exact
-    candidate top-n_probe."""
-    nlist = len(cvecs)
-    dim = len(next(iter(cvecs.values())))
-
-    def cos(a, b):
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return sum(x * y for x, y in zip(a, b)) / (na * nb)
-
-    order = sorted(cvecs)
-    blocks = {cid: (rank * n_super) // nlist for rank, cid in enumerate(order)}
-    supers = {}
-    for b in range(n_super):
-        mv = [cvecs[c] for c, blk in blocks.items() if blk == b]
-        if mv:
-            supers[b] = [
-                sum(v[d] for v in mv) / len(mv) for d in range(dim)
-            ]
-    member_of = {
-        c: min(supers, key=lambda b: (-cos(cvecs[c], supers[b]), b))
-        for c in cvecs
-    }
-    expected = {}
-    for vid, v in vecs.items():
-        probed = sorted(
-            supers, key=lambda b: (-cos(v, supers[b]), b)
-        )[:n_super_probe]
-        cands = [c for c in cvecs if member_of[c] in probed]
-        top = sorted(cands, key=lambda c: (-cos(v, cvecs[c]), c))[:n_probe]
-        if top:
-            expected[vid] = top
-    return expected
-
-
 def test_two_level_n_probe_2_matches_python_reference(spark):
     from hbase_taggregator_spark.operators import similarity as S
 
@@ -141,7 +104,9 @@ def test_two_level_n_probe_2_matches_python_reference(spark):
 
     vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
     cvecs = {i: vecs[i] for i in range(nlist)}
-    expected = _py_two_level(vecs, cvecs, n_super, n_super_probe, n_probe)
+    expected = two_level_reference(
+        vecs, cvecs, n_super, n_super_probe, n_probe
+    )
     assert got == {k: sorted(v) for k, v in expected.items()}
 
 

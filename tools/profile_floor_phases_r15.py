@@ -35,8 +35,6 @@ def floor_phases(spark, acc):
     from hbase_taggregator_spark.operators.similarity import (
         _ivf_residuals,
         _materialize_cell_means,
-        _pq_lut,
-        _resolve_pq_strategy,
         ivf_assign,
         l2_topk,
         pq_codebooks,
@@ -80,10 +78,8 @@ def floor_phases(spark, acc):
         ),
         acc,
     )
-    strategy = _resolve_pq_strategy("auto", books2)
     codes = pq_encode(
-        enc_corpus, books2, M, "vec_id", "embedding", 64,
-        keep=["cent_id"], pq_strategy=strategy,
+        enc_corpus, books2, M, "vec_id", "embedding", 64, keep=["cent_id"]
     )
     t(
         "5_encode_exec_noop",
